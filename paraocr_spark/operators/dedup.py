@@ -272,8 +272,10 @@ def hash_injective(sh: DataFrame) -> bool:
 
 
 #: per-Python-worker cache of {doc_id: frozenset(hashes)}, keyed by the
-#: identity of the loaded broadcast dict so unrelated corpora (tests, other
-#: queries in one session) never mix and stale corpora are evicted. Module
+#: broadcast's id so unrelated corpora (tests, other queries in one
+#: session) never mix and stale corpora are evicted. Not by id(bc.value):
+#: a reused worker frees an old corpus' dict and CPython may hand its
+#: address to the next corpus' dict, which then hit the old sets. Module
 #: level on purpose (guide §4.5): paraocr_spark ships to executors as an
 #: importable zip, so a reused Python worker keeps this across ALL tasks of
 #: a stage — each doc's set is built once per worker, not once per task
@@ -289,9 +291,13 @@ def _make_pair_set_verify(bc, tmin: float):
     import numpy as np
     import pandas as pd
 
+    # the JVM broadcast id, read here where the closure is built (a
+    # worker-side Broadcast carries none): unique for the SparkContext's
+    # lifetime
+    key = bc._jbroadcast.id()
+
     def verify(batches):
         data = bc.value
-        key = id(data)
         cache = _PAIR_SET_CACHE.get(key)
         if cache is None:
             _PAIR_SET_CACHE.clear()  # evict stale corpora, bound memory

@@ -57,8 +57,9 @@ class PipelineConfig:
     #: re-extracted on resume
     shard_cache_path: str | None = None
     #: bucket(warc_ts) fan-out of the output layout (Iceberg bucket(N)
-    #: analog): size to the table, not the cluster — hundreds at 100 TB,
-    #: ~2x cores for small runs
+    #: analog): the number of files per append (more where AQE splits a
+    #: skewed bucket), not the number of write tasks — AQE sizes those by
+    #: bytes. Size it to the table, not the cluster: hundreds at 100 TB
     warc_buckets: int = 64
     extra: dict = field(default_factory=dict)
 

@@ -54,11 +54,14 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     _check_partition_layout(path, parts[0])
     w = (
         with_warc_bucket(df, n_buckets)
-        # co-locate each bucket in one task BEFORE the partitioned write:
-        # without this every task holds an open writer per bucket (buckets x
-        # tasks tiny files, writer memory, and a 6x wall-time hit measured
-        # at 24k docs)
-        .repartition(n_buckets, F.col("warc_bucket"))
+        # rebalance on the bucket BEFORE the partitioned write, so no bucket
+        # is scattered over every task (buckets x tasks tiny files, writer
+        # memory, and a 6x wall-time hit measured at 24k docs). Unlike a
+        # fixed-count repartition, AQE sizes this shuffle by bytes: small
+        # buckets coalesce into ~defaultParallelism tasks (still one file
+        # per bucket; 64 write tasks -> 2 for 1,600 docs on local[3]) and a
+        # skewed bucket splits into advisoryPartitionSizeInBytes-sized files
+        .hint("rebalance", "warc_bucket")
         .write.mode(mode)
         .partitionBy(*parts)
     )
@@ -74,18 +77,16 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     # their dict, a rounding error next to the text bytes)
     w = w.option("parquet.enable.dictionary", "false")
     # plannedWrite (default on) would SORT every task's rows by the
-    # partition columns before writing — but the repartition above already
-    # guarantees one (run_id, warc_bucket) value per task (run_id is a
-    # literal per invocation), so the sort moves the full output through
-    # an UnsafeExternalSorter for nothing. Measured at 1.15M docs / 4
-    # executors: the write stage burned 312 CPU-s (4.8x its 1-executor
-    # cost — 8 concurrent sorters hit the host memory-bandwidth wall);
-    # scoped off, one sequential writer per task needs no sort. Restore
+    # partition columns before writing (run_id is a literal per invocation,
+    # so that means by warc_bucket) — moving the full output through an
+    # UnsafeExternalSorter. Measured at 1.15M docs / 4 executors: the
+    # write stage burned 312 CPU-s (4.8x its 1-executor cost — 8
+    # concurrent sorters hit the host memory-bandwidth wall). Restore
     # after: other writers (e.g. unbucketed saves) want the planned sort.
-    # Without the planned sort the task-side writer must handle a handful
-    # of partition values per task (hash collisions of bucket values onto
-    # tasks — up to ~4 of 16): allow that many concurrent open writers, or
-    # FileFormatWriter falls back to sorting inside the task anyway.
+    # Without the planned sort, each rebalanced task holds about
+    # n_buckets / parallelism whole buckets and writes them through
+    # concurrent open writers, one per bucket; this cap must cover that
+    # count, or FileFormatWriter falls back to sorting inside the task.
     scoped = {
         "spark.sql.optimizer.plannedWrite.enabled": "false",
         "spark.sql.maxConcurrentOutputFileWriters": "32",

@@ -8,7 +8,7 @@ Document classes by ``i % 10`` (FIXTURES.md):
     4-5  link-heavy boilerplate (>60% anchor text blocks must drop)
     6-7  fast-path native text (``text`` column passes the quality gate)
     8    binary layout payload (out-of-order lines, multi page)
-    9    layout doc; every 40th (i % 40 == 9) is a giant skewed doc
+    9    layout doc; every 160th (i % 160 == 9) is a giant skewed doc
     2%   corrupt/NULL overlay -> in-band error rows
 
 Generation is a pure function of ``i`` (seeded per-row PRNG), so it can run

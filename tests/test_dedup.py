@@ -196,3 +196,50 @@ def test_ppjoin_expand_variants_identical(spark, docs):
     a = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="selfjoin").collect()}
     b = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="bucket").collect()}
     assert a == b and a
+
+
+def _corpus(near_dup_of: int) -> dict:
+    """Six docs of distinct words; doc 0's text is doc ``near_dup_of``'s
+    with one word changed, so (0, near_dup_of) is the only near-dup pair."""
+    texts = {d: " ".join(f"w{d}x{k}" for k in range(12)) for d in range(1, 6)}
+    ws = texts[near_dup_of].split(" ")
+    texts[0] = " ".join(ws[:-1] + ["changed"])
+    return texts
+
+
+def test_pair_set_cache_never_serves_a_reused_workers_old_corpus(
+        spark, monkeypatch):
+    """The verify kernel's per-worker set cache must be keyed by the
+    broadcast, not by id(bc.value): on a reused Python worker a new
+    corpus' dict can land at the freed address of the last one and would
+    be verified against the old corpus' sets. Two corpora share doc ids but
+    not near-dups; each result must equal the pure-Python jaccard."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    corpora = [_corpus(near_dup_of=1), _corpus(near_dup_of=2)]
+
+    # one process standing in for a reused worker, with the address reuse
+    # forced: both broadcasts' loaded values are the same dict object
+    monkeypatch.setattr(dedup, "_PAIR_SET_CACHE", {})
+    loaded = {}
+    cands = pd.DataFrame({"a": [0, 0, 1], "b": [1, 2, 2]})
+    for texts in corpora:
+        hashed = {d: [zlib.crc32(s.encode()) for s in _shingles(t)]
+                  for d, t in texts.items()}
+        bc = sc.broadcast(hashed)
+        loaded.clear()
+        loaded.update(hashed)
+        bc._value = loaded
+        verify = dedup._make_pair_set_verify(bc, 0.5 - 1e-6)
+        got = pd.concat(list(verify(iter([cands]))))
+        assert set(zip(got["a"], got["b"])) == set(_brute_pairs(texts, 0.5))
+        bc.unpersist()
+
+    # the same two corpora through dedup_ngram_jaccard in one session (the
+    # session's Python workers are reused across both runs)
+    for texts in corpora:
+        df = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+        got = {(r.a, r.b): r.jaccard for r in
+               dedup.dedup_ngram_jaccard(df.coalesce(1), threshold=0.5).collect()}
+        assert got == _brute_pairs(texts, 0.5) and got

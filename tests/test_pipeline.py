@@ -156,11 +156,12 @@ def test_write_extracted_rejects_mixed_partition_layout(spark, tmp_path):
 
 def test_write_extracted_scopes_sortfree_write_confs(spark, tmp_path, monkeypatch):
     """The bucketed write must run with the planned partition-sort OFF (the
-    repartition already gives ~one partition value per task; the sort moved
-    the full output through an UnsafeExternalSorter — 312 CPU-s at 1.15M
-    docs / 4 executors) and concurrent writers ON for the residual
-    multi-value tasks — and must RESTORE both confs afterwards, success or
-    failure, so unbucketed writers elsewhere keep the planned sort."""
+    sort moved the full output through an UnsafeExternalSorter — 312 CPU-s
+    at 1.15M docs / 4 executors) and concurrent writers ON, because each
+    rebalanced task holds several whole buckets (about n_buckets /
+    parallelism) and writes them through one open writer each — and must
+    RESTORE both confs afterwards, success or failure, so unbucketed
+    writers elsewhere keep the planned sort."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from paraocr_spark.sources.pages import pages_df
@@ -197,6 +198,88 @@ def test_write_extracted_scopes_sortfree_write_confs(spark, tmp_path, monkeypatc
     with pytest.raises(RuntimeError, match="synthetic write failure"):
         pio.write_extracted(df, str(tmp_path / "t2"), n_buckets=2)
     assert {k: spark.conf.get(k) for k in before} == before
+
+
+def _write_plan(spark, path: str) -> str:
+    """Executed physical plan of the last SQL execution that wrote ``path``
+    (Spark's own SQL status store, filled by the listener bus)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            return plan
+    raise AssertionError(f"no write of {path} in the SQL status store")
+
+
+def test_bucketed_write_plan_and_layout(spark, tmp_path):
+    """The bucketed write shuffles by rebalance, never by a fixed-count
+    repartition: AQE sizes its tasks by bytes, yet every bucket still lands
+    in exactly one file, every row in the bucket with_warc_bucket computes
+    for it, and every url exactly once."""
+    import re
+
+    n, n_buckets = 400, 8
+    out = str(tmp_path / "layout")
+    df = (pages_df(spark, n, 4).select("url", "warc_ts", "lang")
+          .withColumn("run_id", F.lit("rp")))
+    pio.write_extracted(df, out, n_buckets=n_buckets)
+
+    plan = _write_plan(spark, out)
+    assert re.search(r"hashpartitioning\(warc_bucket#\d+, \d+\), "
+                     r"REBALANCE_PARTITIONS_BY_COL", plan), plan
+    assert not re.search(r"hashpartitioning\(warc_bucket#\d+, 8\), "
+                         r"REPARTITION_BY_NUM", plan), plan
+
+    bucket_dirs = list(pathlib.Path(out, "run_id=rp").glob("warc_bucket=*"))
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+    back = pio.read_table(spark, out)
+    misplaced = pio.with_warc_bucket(
+        back.withColumnRenamed("warc_bucket", "written"), n_buckets
+    ).where(F.col("written") != F.col("warc_bucket"))
+    assert misplaced.count() == 0
+    assert back.count() == n
+    assert back.select("url").distinct().count() == n
+
+
+def test_split_bucket_overwrite_replay_is_idempotent(spark, tmp_path):
+    """A hot bucket that AQE splits over several tasks (several files in
+    one partition directory) must still be replaced WHOLE by a dynamic
+    partition overwrite: replaying the same micro-batch leaves every url
+    exactly once."""
+    n = 400
+    out = str(tmp_path / "replay")
+    hot_ts = F.lit("2020-01-01 00:00:00").cast("timestamp")
+    batch = (
+        pages_df(spark, n, 4)
+        # 60% of the rows share one warc_ts, so they share one bucket
+        .withColumn("warc_ts", F.when(F.substring("url", -1, 1) < "6", hot_ts)
+                    .otherwise(F.col("warc_ts")))
+        .withColumn("run_id", F.lit("stream-b0"))
+    )
+    hot_bucket = pio.with_warc_bucket(
+        spark.range(1).select(hot_ts.alias("warc_ts")), 8
+    ).first()["warc_bucket"]
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1k")  # every map block of the hot bucket splits off
+    try:
+        pio.write_extracted(batch, out, mode="overwrite", n_buckets=8)
+        hot_dir = pathlib.Path(out, "run_id=stream-b0",
+                               f"warc_bucket={hot_bucket}")
+        assert len(list(hot_dir.glob("*.parquet"))) > 1
+        pio.write_extracted(batch, out, mode="overwrite", n_buckets=8)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    back = pio.read_table(spark, out)
+    assert back.count() == n
+    assert back.select("url").distinct().count() == n
 
 
 def test_zip_source_expands_archives_and_extracts(spark, tmp_path):
