@@ -92,7 +92,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="parquet path for shard-level partial-result reuse "
                    "on giant docs (the per-page txt cache analog, "
                    "parallel.py:431-448): finished shards of an interrupted "
-                   "run are never re-extracted")
+                   "run are never re-extracted. Laid out as "
+                   "<path>/config_fp=<fingerprint>/ directories; a cache "
+                   "written unpartitioned is refused until "
+                   "pipeline.gc_shard_cache rewrites it")
     p.add_argument("--master", default=None, help="override master (local[N] for bench)")
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--repartition", action="store_true",

@@ -109,12 +109,13 @@ def decontaminate(train: DataFrame, test: DataFrame, n: int = 8,
     # guarded by the test-side word-count upper bound (see docstring)
     cand_h = cand.select("h").distinct()
     if broadcast_max_hashes > 0:
-        # coalesce(size, 0): with legacy sizeOfNull, null text rows yield
-        # size = -1 each and a null-heavy test set would UNDERSTATE the
-        # word-count bound, re-enabling the driver-OOM broadcast this guard
-        # exists to prevent (ADVICE r5)
+        # greatest(size, 0): a null text is 0 words. size(null) is null
+        # under ANSI but -1 under legacy sizeOfNull, which coalesce would
+        # pass through: a null-heavy test set would UNDERSTATE the bound
+        # and re-enable the driver-OOM broadcast this guard exists to
+        # prevent (greatest skips the null and clamps the -1)
         bound = test.select(
-            F.sum(F.coalesce(F.size(F.regexp_extract_all(
+            F.sum(F.greatest(F.size(F.regexp_extract_all(
                 F.lower(F.col(text_col)), F.lit(_TOKS), F.lit(0)
             )), F.lit(0))).alias("n")
         ).first()["n"] or 0

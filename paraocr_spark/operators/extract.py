@@ -130,9 +130,9 @@ def extract_kernel(df: DataFrame, backend: str = "default",
     {(stage, pid): (docs, bytes, kernel_wall)} update at completion, so the
     caller gets lineage without a second read-back job over the written
     table — the Amdahl fixed cost that capped 1x2->4x2 scaling (r4 ladder:
-    f≈27.5 s/run). Docs are counted on shard_id==0 rows only, so a salted
-    giant counts once (its reassembled output row), matching the read-back
-    rollup's row count exactly.
+    f≈27.5 s/run). Pass it only for whole-doc input: a giant's shards are
+    not finished documents, so their totals are reported once, at
+    reassembly (_merge_shards_relational).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -144,7 +144,7 @@ def extract_kernel(df: DataFrame, backend: str = "default",
             if len(b):
                 out = _extract_batch(b, pid, backend, backend_kwargs)
                 if lineage_acc is not None:
-                    t_docs += int((out["shard_id"].to_numpy() == 0).sum())
+                    t_docs += len(out)
                     t_bytes += int(out["_doc_bytes"].sum())
                     t_wall += float(out["_wall_s"].sum())
                 yield out
@@ -154,7 +154,8 @@ def extract_kernel(df: DataFrame, backend: str = "default",
     return df.mapInPandas(run, schema=_KERNEL_SCHEMA_DDL)
 
 
-def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
+def _merge_shards_relational(kernel_out: DataFrame,
+                             lineage_acc=None) -> DataFrame:
     """Reassemble giant-doc shards WITHOUT moving bytes through Python.
 
     groupBy(url) + array_sort(collect_list(struct(shard_id, ...))) gives a
@@ -168,6 +169,14 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
     prefix by construction (core/features.py docstring), and n_chars rides
     in as the JVM length. The previous mapInPandas form round-tripped the
     full merged text through Python twice per giant.
+
+    ``lineage_acc`` gets each giant's totals here, where the document is
+    finished: the feature UDF sums its merged rows' _pid/_doc_bytes/_wall_s
+    per _pid and sends one update per task, keyed by (stage, partition,
+    _pid) so a retried task replaces its entry. Lineage then equals
+    lineage_rollup over the written rows, whether the shards ran in this
+    action or were reused from the shard cache. The update rides the
+    features column: an action that prunes it reports no giants.
     """
     pb = F.lit(PAGE_BREAK)
     grouped = kernel_out.groupBy("url").agg(
@@ -218,16 +227,32 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
     )
 
     @F.pandas_udf(FEATURES_DDL)
-    def giant_features(prefix: pd.Series, n_chars: pd.Series) -> pd.DataFrame:
-        # prefix is already text[:FEATURE_CAP] (JVM substring; both count
-        # code points) — compute_features_batch re-caps it, a no-op. Its
-        # n_chars is len(prefix); override with the uncapped JVM length
-        # (null text -> null length -> keep the zero-features 0).
-        feats = compute_features_batch(list(prefix))
-        for f, n in zip(feats, n_chars):
-            if not pd.isna(n):
-                f["n_chars"] = int(n)
-        return pd.DataFrame(feats)
+    def giant_features(
+        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series,
+                                pd.Series]],
+    ) -> Iterator[pd.DataFrame]:
+        by_pid: dict[int, list] = {}
+        for prefix, n_chars, pids, doc_bytes, walls in batches:
+            # prefix is already text[:FEATURE_CAP] (JVM substring; both
+            # count code points) — compute_features_batch re-caps it, a
+            # no-op. Its n_chars is len(prefix); override with the uncapped
+            # JVM length (null text -> null length -> keep the 0).
+            feats = compute_features_batch(list(prefix))
+            for f, n in zip(feats, n_chars):
+                if not pd.isna(n):
+                    f["n_chars"] = int(n)
+            for pid, nbytes, wall in zip(pids, doc_bytes, walls):
+                cur = by_pid.setdefault(int(pid), [0, 0, 0.0])
+                cur[0] += 1
+                cur[1] += int(nbytes)
+                cur[2] += float(wall)
+            yield pd.DataFrame(feats)
+        ctx = TaskContext.get()
+        if lineage_acc is not None and ctx is not None and by_pid:
+            lineage_acc.add({
+                (ctx.stageId(), ctx.partitionId(), pid): tuple(c)
+                for pid, c in by_pid.items()
+            })
 
     return merged.select(
         "url", "warc_ts", "lang", "extracted_text", "spans", "method",
@@ -235,6 +260,7 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
         giant_features(
             F.substring("extracted_text", 1, FEATURE_CAP),
             F.length("extracted_text"),
+            "_pid", "_doc_bytes", "_wall_s",
         ).alias("features"),
         "_pid", "_doc_bytes", "_wall_s",
     )
@@ -287,8 +313,8 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     singles = extract_kernel(normal, backend, backend_kwargs,
                              lineage_acc).drop("shard_id", "n_shards")
     sharded = _merge_shards_relational(
-        extract_kernel(salt_pages(giant_pages), backend, backend_kwargs,
-                       lineage_acc)
+        extract_kernel(salt_pages(giant_pages), backend, backend_kwargs),
+        lineage_acc,
     )
     return singles.unionByName(sharded)
 

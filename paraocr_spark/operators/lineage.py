@@ -24,16 +24,19 @@ LINEAGE_SCHEMA_DDL = (
 
 
 class LineageAccParam(AccumulatorParam):
-    """Replace-merge dict accumulator: {(stage_id, partition_id): (docs,
-    bytes, kernel_wall_s)}.
+    """Replace-merge dict accumulator: {(stage_id, partition_id[, _pid]):
+    (docs, bytes, kernel_wall_s)}, the last key element being the _pid the
+    docs are charged to.
 
-    Each kernel task sends exactly ONE update (its whole-partition totals)
-    keyed by (stage_id, partition_id) — unique per task within a stage, and
-    STABLE across task retries / speculative attempts / stage resubmission
-    (retries keep the stage id). Merging by key replacement therefore makes
-    the rollup idempotent under every re-execution mode, sidestepping the
-    classic "accumulators in transformations double-count on retry" hazard:
-    a retried task overwrites its own earlier entry instead of adding to it.
+    Each task sends exactly ONE update (its whole-partition totals): a
+    kernel task keyed by (stage_id, partition_id), a giant-reassembly task
+    one entry per merged _pid keyed by (stage_id, partition_id, _pid). Both
+    keys are unique per task within a stage and STABLE across task retries
+    / speculative attempts / stage resubmission (retries keep the stage
+    id). Merging by key replacement therefore makes the rollup idempotent
+    under every re-execution mode, sidestepping the classic "accumulators
+    in transformations double-count on retry" hazard: a retried task
+    overwrites its own earlier entry instead of adding to it.
     """
 
     def zero(self, value):  # noqa: D102 — AccumulatorParam contract
@@ -46,28 +49,18 @@ class LineageAccParam(AccumulatorParam):
 
 def lineage_rows_from_acc(acc_value: dict, run_id: str, config_fp: str,
                           invocation_id: str) -> list[dict]:
-    """Driver-side rollup of the kernel accumulator into lineage rows.
+    """Driver-side rollup of the accumulator into lineage rows.
 
-    Sums the (stage, pid) entries by pid — the normal and giant kernel
-    branches run in different stages but may share partition ids, and the
-    lineage contract is one row per kernel partition (matching the
-    read-back rollup's groupBy(_pid)).
-
-    PER-PID ATTRIBUTION CAVEAT (ADVICE r5): on runs with giant shards the
-    two lineage paths attribute rows differently — this accumulator path
-    emits a doc_count=0 row for a partition that processed only shards
-    (docs==0, bytes>0) and charges giants to the kernel-task pids that ran
-    the shards, while the shard-cache read-back rollup groups a giant
-    under its MERGED row's _pid and never emits bytes-only rows. Totals
-    (doc_count / bytes / wall sums) agree exactly; per-partition rows do
-    not. Consumers must treat partition_id as an attribution key, not a
-    stable identity across the two paths."""
+    Sums the entries by the _pid each is charged to (``key[-1]``): normal
+    docs report from their kernel task, a salted giant once from its merged
+    row at reassembly. The rows therefore equal lineage_rollup over the
+    written rows of the invocation, one per _pid, on every route."""
     by_pid: dict[int, list] = {}
-    for (_stage, pid), (docs, nbytes, wall) in acc_value.items():
-        if docs == 0 and nbytes == 0:
+    for key, (docs, nbytes, wall) in acc_value.items():
+        if docs == 0:
             continue  # empty partition (e.g. a fully-resumed run): no row,
-            # matching the read-back rollup over zero written rows
-        cur = by_pid.setdefault(pid, [0, 0, 0.0])
+            # as lineage_rollup over zero written rows has none
+        cur = by_pid.setdefault(key[-1], [0, 0, 0.0])
         cur[0] += docs
         cur[1] += nbytes
         cur[2] += wall

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paraocr_spark.operators.extract import extract_pages
+from paraocr_spark.operators.extract import _KERNEL_SCHEMA_DDL, extract_pages
 from paraocr_spark.operators.lineage import config_fingerprint, lineage_rollup
 from paraocr_spark.operators.resume import filter_unprocessed
 from paraocr_spark.sources import io as pio
@@ -91,8 +91,20 @@ def ignore_keyword_filter(pages: DataFrame, keywords: list) -> DataFrame:
     return pages.where(~cond)
 
 
+#: the shard cache's one read schema: the kernel output plus the config_fp
+#: partition column. Passing it skips the footer-inference job per read,
+#: pins config_fp to string (a hex digest is never type-inferred) and reads
+#: a cache holding no data file (only _SUCCESS) as empty
+_SHARD_CACHE_SCHEMA = _KERNEL_SCHEMA_DDL + ", config_fp string"
+
+
+def _read_shard_cache(spark: SparkSession, cache_path: str) -> DataFrame:
+    return spark.read.schema(_SHARD_CACHE_SCHEMA).parquet(cache_path)
+
+
 def extract_with_shard_cache(
-    spark: SparkSession, todo: DataFrame, cfg: PipelineConfig
+    spark: SparkSession, todo: DataFrame, cfg: PipelineConfig,
+    lineage_acc=None,
 ) -> DataFrame:
     """Extraction with SHARD-granular partial-result reuse for giant docs.
 
@@ -107,12 +119,19 @@ def extract_with_shard_cache(
     kernel. Normal docs keep whole-doc granularity — they are small, and a
     per-doc cache write for 99% of the corpus would double the write volume.
 
-    NOTE eager: appending fresh shards to the cache is an ACTION (runs the
-    giant kernel when called); the returned DataFrame is lazy only in the
-    normal-doc branch + reassembly. Reused shards keep their original
-    _pid/_doc_bytes/_wall_s, so a resumed run's lineage attributes cached
-    work to the invocation that actually did it.
+    The cache is partitioned by config_fp (``config_fp=<fingerprint>/``
+    directories). The fresh-shard append is an ACTION that runs the giant
+    kernel when called, and it runs unconditionally: a partitioned append
+    with no rows writes no data file, so a fully-cached resume adds no
+    cache file without an emptiness probe first. The returned DataFrame is
+    lazy (normal-doc kernel + reassembly). ``lineage_acc`` (operators/
+    lineage.LineageAccParam) is fed by that lazy part: normal docs from
+    their kernel tasks, each giant once at reassembly from its shards'
+    stored _pid/_doc_bytes/_wall_s, reused or fresh alike — the same totals
+    as the giant's written row.
     """
+    import os
+
     from paraocr_spark.operators.extract import (
         _merge_shards_relational,
         extract_kernel,
@@ -120,41 +139,46 @@ def extract_with_shard_cache(
     )
     from paraocr_spark.operators.skew import salt_pages
 
-    import os
-
+    cache_path = cfg.shard_cache_path
     # recover a gc_shard_cache swap that crashed between its two renames:
     # the __old backup IS the pre-GC cache — restore it rather than
     # silently re-extracting every giant shard
-    _backup = cfg.shard_cache_path.rstrip("/") + "__old"
-    if os.path.isdir(_backup) and not os.path.isdir(cfg.shard_cache_path):
-        os.rename(_backup, cfg.shard_cache_path)
+    _backup = cache_path.rstrip("/") + "__old"
+    if os.path.isdir(_backup) and not os.path.isdir(cache_path):
+        os.rename(_backup, cache_path)
+    # a cache written before the config_fp= layout holds its data files at
+    # the root; once a config_fp= directory exists next to them, partition
+    # discovery silently drops them (their giants vanish from the output)
+    if os.path.isdir(cache_path) and any(
+        not f.startswith(("_", "."))
+        and os.path.isfile(os.path.join(cache_path, f))
+        for f in os.listdir(cache_path)
+    ):
+        raise ValueError(
+            f"shard cache {cache_path} holds data files at its root (the "
+            "unpartitioned layout); rewrite it once into the config_fp= "
+            "layout with gc_shard_cache(spark, path, keep_fp), or point "
+            "shard_cache_path at a fresh directory"
+        )
 
     normal, giant_pages = split_normal_giants(todo)
-    shards = salt_pages(giant_pages)
-    cache: DataFrame | None = None
-    try:
-        cache = spark.read.parquet(cfg.shard_cache_path)
-    except Exception:
-        cache = None  # first run: no cache yet
-    shards_todo = shards
-    if cache is not None:
+    shards_todo = salt_pages(giant_pages)
+    if os.path.isdir(cache_path):
         done_keys = (
-            cache.where(F.col("config_fp") == cfg.fingerprint)
+            _read_shard_cache(spark, cache_path)
+            .where(F.col("config_fp") == cfg.fingerprint)
             .select("url", "shard_id")
         )
-        shards_todo = shards.join(done_keys, ["url", "shard_id"], "left_anti")
-    # skip the append entirely on a fully-cached resume: the emptiness probe
-    # runs only the (kernel-free) salt + anti-join plan, while an
-    # unconditional append would run a write job per resume and accumulate
-    # zero-row files the compactor never covers
-    if cache is None or not shards_todo.isEmpty():
-        fresh = extract_kernel(
-            shards_todo, cfg.backend, cfg.backend_kwargs
-        ).withColumn("config_fp", F.lit(cfg.fingerprint))
-        fresh.write.mode("append").parquet(cfg.shard_cache_path)
+        shards_todo = shards_todo.join(done_keys, ["url", "shard_id"],
+                                       "left_anti")
+    (
+        extract_kernel(shards_todo, cfg.backend, cfg.backend_kwargs)
+        .withColumn("config_fp", F.lit(cfg.fingerprint))
+        .write.mode("append").partitionBy("config_fp").parquet(cache_path)
+    )
 
     relevant = (
-        spark.read.parquet(cfg.shard_cache_path)
+        _read_shard_cache(spark, cache_path)
         .where(F.col("config_fp") == cfg.fingerprint)
         # this run's giants only (the cache may hold other runs' urls), and
         # one row per shard even if an at-least-once append duplicated any
@@ -162,10 +186,9 @@ def extract_with_shard_cache(
         .dropDuplicates(["url", "shard_id"])
         .drop("config_fp")
     )
-    singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs).drop(
-        "shard_id", "n_shards"
-    )
-    return singles.unionByName(_merge_shards_relational(relevant))
+    singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs,
+                             lineage_acc).drop("shard_id", "n_shards")
+    return singles.unionByName(_merge_shards_relational(relevant, lineage_acc))
 
 
 def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
@@ -174,6 +197,10 @@ def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
     fingerprint no longer matches any live config) and compact the small
     files that incremental appends accumulate. Staging-dir + rename swap,
     same object-store caveat as sources/io.compact_table.
+
+    Reads either cache layout and writes the config_fp= one, so it is also
+    the one-time migration of a cache written unpartitioned (data files at
+    its root), which extract_with_shard_cache refuses.
 
     Crash safety: a prior run may have died between the two renames (cache
     gone, data stranded at ``__old``) or left a stale ``__gc``/``__old``
@@ -195,29 +222,28 @@ def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(backup, ignore_errors=True)
 
-    try:
-        df = spark.read.parquet(cache_path)
-    except Exception:
+    if not os.path.isdir(cache_path):
         return {"files_before": 0, "files_after": 0, "rows_kept": 0}
     files_before = len(list(pathlib.Path(cache_path).rglob("*.parquet")))
     keep = (
-        df.where(F.col("config_fp") == keep_fp)
+        _read_shard_cache(spark, cache_path)
+        .where(F.col("config_fp") == keep_fp)
         .dropDuplicates(["url", "shard_id"])
     )
     total = sum(
         f.stat().st_size for f in pathlib.Path(cache_path).rglob("*.parquet")
     )
     n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    keep.repartition(n_files).write.mode("overwrite").parquet(staging)
+    (keep.repartition(n_files).write.mode("overwrite")
+     .partitionBy("config_fp").parquet(staging))
     os.rename(cache_path, backup)
     os.rename(staging, cache_path)
     shutil.rmtree(backup, ignore_errors=True)
-    kept = spark.read.parquet(cache_path)
     files_after = len(list(pathlib.Path(cache_path).rglob("*.parquet")))
     return {
         "files_before": files_before,
         "files_after": files_after,
-        "rows_kept": kept.count(),
+        "rows_kept": _read_shard_cache(spark, cache_path).count(),
     }
 
 
@@ -273,29 +299,24 @@ def run_and_write(
         todo = todo.repartition(cfg.min_partitions)
     # ONE kernel pass, ONE Spark job: the lineage rollup rides the write
     # action itself via a replace-merge accumulator (each kernel task sends
-    # its partition totals once, idempotent under retries —
-    # operators/lineage.LineageAccParam), and the resulting handful of rows
-    # is appended to the lineage table from the driver with pyarrow. The
-    # previous shape (write job, then a read-back scan of the written table
-    # for the rollup, then a third job to write it) paid two extra
-    # scheduler/commit round-trips per run — the dominant share of the
-    # f≈27.5 s Amdahl fixed cost that capped 1x2->4x2 scaling in the r4
-    # ladder decomposition. The read-back path survives below for the
-    # shard-cache route, where reused shards never run the kernel this
-    # invocation and so never reach the accumulator.
+    # its partition totals once, each giant reports once at reassembly,
+    # idempotent under retries — operators/lineage.LineageAccParam), and the
+    # resulting handful of rows is appended to the lineage table from the
+    # driver with pyarrow. The previous shape (write job, then a read-back
+    # scan of the written table for the rollup, then a third job to write
+    # it) paid two extra scheduler/commit round-trips per run — the
+    # dominant share of the f≈27.5 s Amdahl fixed cost that capped 1x2->4x2
+    # scaling in the r4 ladder decomposition.
     from paraocr_spark.operators.lineage import (
         LineageAccParam,
         lineage_rows_from_acc,
     )
 
-    use_cache_path = bool(cfg.shard_cache_path and cfg.salt)
-    acc = None if use_cache_path else spark.sparkContext.accumulator(
-        {}, LineageAccParam()
-    )
+    acc = spark.sparkContext.accumulator({}, LineageAccParam())
     t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
     extracted_df = (
-        extract_with_shard_cache(spark, todo, cfg)
-        if use_cache_path
+        extract_with_shard_cache(spark, todo, cfg, acc)
+        if cfg.shard_cache_path and cfg.salt
         else extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
                            backend_kwargs=cfg.backend_kwargs, lineage_acc=acc)
     )
@@ -307,23 +328,9 @@ def run_and_write(
     )
     pio.write_extracted(out, out_path, n_buckets=cfg.warc_buckets)
     t_write = time.perf_counter() - t0
-    if acc is not None:
-        lin_rows = lineage_rows_from_acc(
-            acc.value, cfg.run_id, cfg.fingerprint, invocation_id
-        )
-    else:
-        # shard-cache invocations: reused shards carry their ORIGINAL
-        # metric columns in the written table, so the exact rollup needs
-        # the read-back scan. run_id prunes to this run's partition dirs;
-        # invocation_id (constant per file) lets parquet stats skip earlier
-        # resumes' files without reading their pages.
-        written = pio.read_table(spark, out_path).where(
-            (F.col("run_id") == cfg.run_id)
-            & (F.col("invocation_id") == invocation_id)
-        )
-        lin = lineage_rollup(written, cfg.run_id, cfg.fingerprint,
-                             invocation_id)
-        lin_rows = [r.asDict() for r in lin.collect()]
+    lin_rows = lineage_rows_from_acc(
+        acc.value, cfg.run_id, cfg.fingerprint, invocation_id
+    )
     n = sum(r["doc_count"] for r in lin_rows)
     pio.write_lineage_rows(lin_rows, lineage_path)
     wall = time.perf_counter() - t0

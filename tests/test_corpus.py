@@ -30,6 +30,42 @@ def test_decontaminate_finds_planted_overlap(spark):
     assert got == {97: (1, 1)}  # exactly one shared 4-gram, one train doc
 
 
+def test_decontaminate_bound_counts_null_text_as_zero_words(spark):
+    """Under legacy sizeOfNull (ANSI off) size(null) is -1, so null test
+    texts pulled the word-count bound below the true count and re-enabled
+    the broadcast the guard refuses. Here the true count (8) is above
+    broadcast_max_hashes (5) while the old bound (8 - 20) was not: no
+    broadcast, and the same output as with ANSI on."""
+    train = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "unrelated words entirely different tokens here")],
+        schema="doc_id long, text string",
+    )
+    test = spark.createDataFrame(
+        [(100, "alpha beta gamma delta other tail words now")]
+        + [(200 + i, None) for i in range(20)],
+        schema="doc_id long, text string",
+    )
+    confs = {"spark.sql.ansi.enabled": "false",
+             "spark.sql.legacy.sizeOfNull": "true",
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = decontaminate(train, test, n=4, broadcast_max_hashes=5)
+        legacy = sorted(q.collect())
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan, plan
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        ansi = sorted(decontaminate(train, test, n=4,
+                                    broadcast_max_hashes=5).collect())
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert legacy == ansi == [(100, 1, 1)]
+
+
 def test_stratified_sample_deterministic_and_bounded(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     s1 = stratified_sample(docs, quotas={"en": 300}, default_quota=100)

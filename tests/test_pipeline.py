@@ -2,6 +2,7 @@
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from paraocr_spark.pipeline import PipelineConfig, run_and_write, run_extraction
@@ -105,7 +106,7 @@ def test_config_fingerprint_invalidates_resume(spark, tmp_path):
 def test_lineage_scoped_to_invocation(spark, tmp_path):
     """A resume that REUSES the same run_id must not roll prior appends'
     rows into the new invocation's lineage (double-count bug class), and
-    the lineage read-back must partition-prune on run_id."""
+    a reader of one run's output rows must partition-prune on run_id."""
     out = str(tmp_path / "inv_out")
     lin = str(tmp_path / "inv_lin")
     m1 = run_and_write(spark, pages_df(spark, 80, 4), out, lin,
@@ -123,8 +124,8 @@ def test_lineage_scoped_to_invocation(spark, tmp_path):
     }
     assert per_inv[m1["invocation_id"]] == 80
     assert per_inv[m2["invocation_id"]] == 40
-    # run_id is a physical partition directory -> the read-back predicate
-    # prunes instead of scanning every run's appends
+    # run_id is a physical partition directory -> a reader's run_id
+    # predicate prunes instead of scanning every run's appends
     import pathlib as _pl
     dirs = [p.name for p in _pl.Path(out).iterdir() if p.is_dir()]
     assert any(d == "run_id=same" for d in dirs), dirs
@@ -133,6 +134,47 @@ def test_lineage_scoped_to_invocation(spark, tmp_path):
     with contextlib.redirect_stdout(buf):
         pio.read_table(spark, out).where(F.col("run_id") == "same").explain()
     assert "run_id" in buf.getvalue() and "PartitionFilters" in buf.getvalue()
+
+
+@pytest.mark.parametrize("route", ["plain", "shard_cache"])
+def test_lineage_rows_equal_rollup_of_written_rows(spark, tmp_path, route):
+    """One lineage path: on both routes the lineage rows of an invocation
+    equal lineage_rollup over the rows it wrote, partition for partition —
+    normal docs charged to their kernel task, a giant once to its merged
+    row's _pid. On the cache route one giant's shards are reused from the
+    cache and the other's are extracted fresh."""
+    import math
+
+    from paraocr_spark.operators.lineage import lineage_rollup
+
+    pages = pages_df(spark, 200, 4)  # giants at ids 9 and 169
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    cfg = PipelineConfig(run_id="ln")
+    if route == "shard_cache":
+        cfg = PipelineConfig(run_id="ln",
+                             shard_cache_path=str(tmp_path / "cache"))
+        run_and_write(spark, pages.where(F.col("url").endswith("/9")),
+                      str(tmp_path / "warm"), str(tmp_path / "warm_lin"), cfg)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")  # a giant's shards land in several tasks
+    try:
+        m = run_and_write(spark, pages, out, lin, cfg)
+    finally:
+        spark.conf.set(key, prev)
+    assert m["rows"] == 200
+
+    inv = F.col("invocation_id") == m["invocation_id"]
+    written = pio.read_table(spark, out).where(inv)
+    exp = {r.partition_id: r for r in
+           lineage_rollup(written, "ln", cfg.fingerprint).collect()}
+    got = {r.partition_id: r for r in
+           spark.read.parquet(lin).where(inv).collect()}
+    assert sorted(got) == sorted(exp)
+    for pid, e in exp.items():
+        g = got[pid]
+        assert (g.doc_count, g.bytes) == (e.doc_count, e.bytes), pid
+        assert math.isclose(g.wall_time_s, e.wall_time_s), pid
 
 
 def test_write_extracted_rejects_mixed_partition_layout(spark, tmp_path):

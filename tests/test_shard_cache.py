@@ -85,9 +85,9 @@ def test_shard_cache_invalidated_by_config_change(spark, paths):
 
 
 def test_fully_cached_resume_writes_nothing_and_gc_bounds_files(spark, paths):
-    """VERDICT r2 #5: a fully-cached resume must not run an append job (no
-    new cache files), and gc_shard_cache drops stale config_fp generations
-    + compacts, so K resumes/config-bumps leave a bounded file count."""
+    """VERDICT r2 #5: a fully-cached resume must not add a cache file, and
+    gc_shard_cache drops stale config_fp generations + compacts, so K
+    resumes/config-bumps leave a bounded file count."""
     import pathlib
 
     from paraocr_spark.pipeline import gc_shard_cache
@@ -103,7 +103,7 @@ def test_fully_cached_resume_writes_nothing_and_gc_bounds_files(spark, paths):
     files1 = cache_files()
     assert files1, "first run must populate the cache"
 
-    # resume with identical config: everything cached -> append skipped
+    # resume with identical config: everything cached -> zero-row append
     done = spark.read.parquet(paths["out1"])
     run_and_write(spark, pages, paths["out1"], paths["lin"], cfg, done=done)
     assert cache_files() == files1, "fully-cached resume appended files"
@@ -161,3 +161,74 @@ def test_gc_crash_recovery_and_stale_dirs(spark, paths):
     stats = gc_shard_cache(spark, paths["cache"], cfg.fingerprint)
     assert stats["rows_kept"] == rows
     assert not os.path.exists(backup) and not os.path.exists(staging)
+
+
+def _parquet_files(path):
+    import pathlib
+
+    return sorted(pathlib.Path(path).rglob("*.parquet"))
+
+
+def test_runs_without_giants_leave_an_empty_cache(spark, paths):
+    """Runs whose pages hold no giant append zero shard rows, which the
+    config_fp= layout writes as no data file at all: the cache is then a
+    directory without parquet files, and the next run must read it as
+    empty. A later run with giants fills it; every url lands once."""
+    import os
+
+    pages = pages_df(spark, N, 4)
+    no_giants = pages.where(~F.col("url").rlike("/(9|169)$"))
+    cfg = PipelineConfig(run_id="sc", shard_cache_path=paths["cache"])
+    run_and_write(spark, pages_df(spark, 9, 2), paths["out1"], paths["lin"],
+                  cfg)
+    assert os.path.isdir(paths["cache"]) and not _parquet_files(paths["cache"])
+    m2 = run_and_write(spark, no_giants, paths["out1"], paths["lin"], cfg,
+                       done=spark.read.parquet(paths["out1"]))
+    assert m2["rows"] == N - 2 - 9
+    assert not _parquet_files(paths["cache"])
+
+    m3 = run_and_write(spark, pages, paths["out1"], paths["lin"], cfg,
+                       done=spark.read.parquet(paths["out1"]))
+    assert m3["rows"] == 2
+    assert _parquet_files(paths["cache"])
+    out = spark.read.parquet(paths["out1"])
+    assert out.count() == N
+    assert out.select("url").distinct().count() == N
+
+
+def test_unpartitioned_cache_refused_until_gc_rewrites_it(spark, paths):
+    """A cache in the unpartitioned layout (data files at its root) would
+    be silently dropped by partition discovery after the first config_fp=
+    append, losing its giants from the output. The run must refuse it,
+    naming gc_shard_cache; gc rewrites it into the config_fp= layout, and
+    the resumed run then reuses its shards and returns every url once."""
+    import os
+
+    from paraocr_spark.operators.extract import extract_kernel
+    from paraocr_spark.operators.skew import salt_pages
+    from paraocr_spark.pipeline import gc_shard_cache
+
+    pages = pages_df(spark, N, 4)
+    cfg = PipelineConfig(run_id="sc", shard_cache_path=paths["cache"])
+    (extract_kernel(salt_pages(pages.where(F.col("url").endswith("/9"))))
+     .withColumn("config_fp", F.lit(cfg.fingerprint))
+     .write.parquet(paths["cache"]))
+    n9 = spark.read.parquet(paths["cache"]).count()
+    assert n9 > 1
+
+    with pytest.raises(ValueError, match="gc_shard_cache"):
+        run_and_write(spark, pages, paths["out1"], paths["lin"], cfg)
+    assert not os.path.exists(paths["out1"])
+
+    stats = gc_shard_cache(spark, paths["cache"], cfg.fingerprint)
+    assert stats["rows_kept"] == n9
+    assert all(f.parent.name == f"config_fp={cfg.fingerprint}"
+               for f in _parquet_files(paths["cache"]))
+
+    m = run_and_write(spark, pages, paths["out1"], paths["lin"], cfg)
+    assert m["rows"] == N
+    out = spark.read.parquet(paths["out1"])
+    assert out.count() == N
+    assert out.select("url").distinct().count() == N
+    cache = spark.read.parquet(paths["cache"])
+    assert cache.where(F.col("url").endswith("/9")).count() == n9
